@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.abi.{AbiCache, AbiSchema, MapAbiFetcher}
 import graft.catalog.Contracts
-import graft.ingest.{BlockSource, FakeBlockRpc, IngestJob, LogSource}
+import graft.ingest.{BlockSource, Demux, FakeBlockRpc, IngestJob, LogSource, ManifestStore}
 
 /** CLI mirroring the reference's entry points:
   *
@@ -18,7 +18,9 @@ import graft.ingest.{BlockSource, FakeBlockRpc, IngestJob, LogSource}
   * deterministic replay/fake RPCs; a JSON-RPC client drops in without
   * touching this code. Dispatch is by topic0/selector (the engine's demux
   * key) rather than per-address fetch loops, so one pass ingests every
-  * address of the contract.
+  * address of the contract. The ingest store is a [[ManifestStore]]
+  * partitioned by table_name: `ingest` commits to it, `compact` and
+  * `mstore-vacuum` maintain it, `warehouse <store>` reads it.
   */
 object Main {
 
@@ -80,7 +82,7 @@ object Main {
         spark.read.parquet(rawLogs)
           .agg(org.apache.spark.sql.functions.max("block_number"))
           .head().getLong(0))
-      val n = IngestJob.run(spark, rpc, defs, None, store,
+      val n = IngestJob.runAtomic(spark, rpc, defs, None, new ManifestStore(store),
         c.creationBlock, head, blocksStep = c.blocksStep, maxLogs = 10000)
       println(s"ingested $n rows into $store (resume head=$head)")
       if (owned) spark.stop()
@@ -93,30 +95,21 @@ object Main {
       println(s"wrote blocks [$from,$to] to $out")
       if (owned) spark.stop()
 
-    // maintenance: small-file compaction of a demux store (exclusive job;
-    // use a ManifestStore root for snapshot-isolated compaction instead)
-    case "compact" :: store :: rest
+    // maintenance on the ingest store: snapshot-isolated small-file
+    // compaction and retention vacuum (see ManifestStore.vacuum's
+    // contract). The manifest records no partition columns, so compact
+    // keeps the ingest store's table_name layout explicitly — flattened,
+    // every per-table read would scan every file
+    case "compact" :: root :: rest
         if rest.length <= 1 &&
           rest.headOption.forall(_.toLongOption.exists(_ > 0)) =>
       val targetBytes = rest.headOption.flatMap(_.toLongOption)
         .getOrElse(128L * 1024 * 1024)
       val (spark, owned) = session()
-      val nFiles = graft.ingest.Compact.run(spark, store, targetBytes)
-      println(s"compacted $store to $nFiles data files (target $targetBytes B)")
-      if (owned) spark.stop()
-
-    // maintenance on a manifest-committed store: snapshot-isolated
-    // compaction and retention vacuum (complete-manifest retention,
-    // age-gated data reclaim — see ManifestStore.vacuum's contract)
-    case "mstore-compact" :: root :: rest
-        if rest.length <= 1 &&
-          rest.headOption.forall(_.toLongOption.exists(_ > 0)) =>
-      val targetBytes = rest.headOption.flatMap(_.toLongOption)
-        .getOrElse(128L * 1024 * 1024)
-      val (spark, owned) = session()
-      val store = new graft.ingest.ManifestStore(root)
-      store.compact(spark, targetBytes)
-      println(s"compacted $root at version ${store.currentVersion(spark)}")
+      val store = new ManifestStore(root)
+      store.compact(spark, targetBytes, partitionCols = Seq("table_name"))
+      println(s"compacted $root to ${store.currentFiles(spark).size} data files " +
+        s"at version ${store.currentVersion(spark)} (target $targetBytes B)")
       if (owned) spark.stop()
 
     // bounds keep Int/arithmetic exact: keep survives toInt, and
@@ -132,18 +125,19 @@ object Main {
         .map(_ * 60 * 1000)
         .getOrElse(graft.ingest.ManifestStore.DefaultVacuumMinAgeMs)
       val (spark, owned) = session()
-      val store = new graft.ingest.ManifestStore(root)
+      val store = new ManifestStore(root)
       store.vacuum(spark, keepVersions = keep, minDataAgeMs = minAgeMs)
       println(s"vacuumed $root (keep=$keep, minAge=${minAgeMs / 60000} min); " +
         s"current version ${store.currentVersion(spark)}")
       if (owned) spark.stop()
 
-    // register a demux store's decoded tables as <db>.<table> in the
+    // register an ingest store's decoded tables as <db>.<table> in the
     // session catalog warehouse (reference README.md:73's CREATE DATABASE).
     // With an explicit <schema>.<contract>, table defs come from the same
     // config + ABI tree the ingest command uses; the no-arg form serves
-    // the built-in fixture store. The db must be a simple (undotted)
-    // name — a target in the db position falls through to usage.
+    // the built-in (plain-parquet) fixture demux store. The db must be a
+    // simple (undotted) name — a target in the db position falls through
+    // to usage.
     case "warehouse" :: rest if rest.lift(2).forall(isTarget) &&
         rest.lift(1).forall(db => db.nonEmpty && !db.contains('.')) =>
       val (spark, owned) = session()
@@ -159,7 +153,10 @@ object Main {
           (graft.fixtures.MakerFixtures.demuxStorePath,
             graft.fixtures.MakerFixtures.fixtureDefs)
       }
-      graft.catalog.Warehouse.materialize(spark, store, defs, db, overwrite = true)
+      val decoded: AbiSchema.TableDef => DataFrame =
+        if (rest.isEmpty) Demux.readTable(spark, store, _)
+        else Demux.readTable(spark, new ManifestStore(store), _)
+      graft.catalog.Warehouse.materialize(spark, decoded, defs, db, overwrite = true)
       // defs carrying a conf-tree namespace land in THEIR schema's
       // database (reference classes.py:56); namespace-less defs in `db`
       val dbs = defs.map(d =>
@@ -212,10 +209,9 @@ object Main {
            |usage:
            |  graft.Main ingest <schema>.<contract> [confDir] [store] [rawLogs] [head]
            |  graft.Main blocks <from> <to> <out>
-           |  graft.Main compact <storePath> [targetBytes]
-           |  graft.Main mstore-compact <manifestRoot> [targetBytes]
-           |  graft.Main mstore-vacuum <manifestRoot> [keepVersions] [minAgeMinutes]
-           |  graft.Main warehouse [storePath] [db] [<schema>.<contract>]
+           |  graft.Main compact <store> [targetBytes]
+           |  graft.Main mstore-vacuum <store> [keepVersions] [minAgeMinutes]
+           |  graft.Main warehouse [store] [db] [<schema>.<contract>]
            |  graft.Main run <queryName> [sfDir]
            |  graft.Main explain <queryName> [sfDir]
            |  graft.Main sql "<query>" [sfDir]""".stripMargin)

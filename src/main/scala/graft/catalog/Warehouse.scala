@@ -1,8 +1,7 @@
 package graft.catalog
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.abi.AbiSchema
-import graft.ingest.Demux
 
 /** Schema-qualified warehouse namespaces (SURVEY Q2; reference
   * classes.py:56 `create schema if not exists {schema}`, README.md:73's
@@ -21,8 +20,19 @@ import graft.ingest.Demux
   */
 object Warehouse {
 
+  /** Sessions×table sets this JVM has fully materialized (non-overwrite
+    * path only), so a repeat gate invocation skips one CREATE DATABASE +
+    * one catalog tableExists lookup PER DEF — pure catalog-metadata
+    * churn. The source is not part of the key: a non-overwrite call never
+    * rewrites an existing table, whatever it would read. An overwrite
+    * call always runs and re-registers. */
+  private val materialized =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
+
   /** Create each def's database if needed and materialize its decoded
-    * table from the demux store. A def carrying a namespace
+    * table, read through `decoded` — the caller names the store and its
+    * format (`Demux.readTable` over a plain demux directory or a
+    * [[graft.ingest.ManifestStore]]). A def carrying a namespace
     * (`schemaName`, the conf-tree directory) lands in ITS OWN database —
     * the reference's `create schema if not exists {schema}`
     * (classes.py:56): aave.lending_pool_evt_deposit and
@@ -40,19 +50,10 @@ object Warehouse {
     * prior Spark table materialization (part files, `col=...` partition
     * dirs, and `_`/`.`-prefixed bookkeeping); anything else aborts loudly
     * instead of being destroyed. */
-  /** Sessions×stores this JVM has fully materialized (non-overwrite
-    * path only): a repeat call was paying one CREATE DATABASE + one
-    * catalog tableExists lookup PER DEF per gate invocation — pure
-    * catalog-metadata churn, since the fixture stores behind these
-    * gates are marker-guarded immutable within a JVM. An overwrite
-    * call always runs and re-registers. */
-  private val materialized =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String, String)]()
-
-  def materialize(spark: SparkSession, storePath: String,
+  def materialize(spark: SparkSession, decoded: AbiSchema.TableDef => DataFrame,
                   defs: Seq[AbiSchema.TableDef], db: String = "makermcd",
                   overwrite: Boolean = false): Unit = synchronized {
-    val memoKey = (spark, storePath, db + ":" + defs.map(_.qualified).mkString(","))
+    val memoKey = (spark, db + ":" + defs.map(_.qualified).mkString(","))
     if (!overwrite && materialized.contains(memoKey)) return
     defs.groupBy(d => if (d.schemaName.isEmpty) db else d.schemaName)
       .toSeq.sortBy(_._1).foreach { case (dbName, ds) =>
@@ -64,8 +65,7 @@ object Warehouse {
           val exists = spark.catalog.tableExists(fq)
           if (!exists || overwrite) {
             if (!exists) clearOrphanTableDir(spark, dbName, d.table)
-            Demux.readTable(spark, storePath, d)
-              .write.mode("overwrite").format("parquet").saveAsTable(fq)
+            decoded(d).write.mode("overwrite").format("parquet").saveAsTable(fq)
           }
         }
       }

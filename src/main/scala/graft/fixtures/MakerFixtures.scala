@@ -74,7 +74,7 @@ object MakerFixtures {
     val marker = new java.io.File(s"$dir/_DEMUXED_v3")
     if (marker.exists()) return
     Demux.writeDemuxed(spark.read.parquet(rawLogsPath), fixtureDefs,
-      demuxStorePath, overwrite = true)
+      demuxStorePath)
     java.nio.file.Files.writeString(marker.toPath, "ok")
   }
 

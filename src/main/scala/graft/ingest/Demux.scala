@@ -22,8 +22,9 @@ import graft.codec.GraftFunctions
   *
   * Scale design (SURVEY §7.4): `tagged` adds a table_name column in ONE
   * pass over the raw logs (no shuffle — a narrow CASE chain on topics[0]);
-  * `writeDemuxed` persists it partitioned by table_name so per-table reads
-  * are partition-pruned. 412 output tables cost one scan, not 412.
+  * chain ingest commits it to a [[ManifestStore]] partitioned by
+  * table_name ([[IngestJob]]) so per-table reads are partition-pruned.
+  * 412 output tables cost one scan, not 412.
   */
 object Demux {
 
@@ -89,11 +90,13 @@ object Demux {
   def taggedKnown(raw: DataFrame, defs: Seq[AbiSchema.TableDef]): DataFrame =
     tagged(raw, defs).filter(col("table_name").isNotNull)
 
-  /** One-pass demux write: raw+tag partitioned by table_name. */
-  def writeDemuxed(raw: DataFrame, defs: Seq[AbiSchema.TableDef], path: String,
-                   overwrite: Boolean = false): Unit =
+  /** One-pass demux write of a plain-parquet store: raw+tag partitioned
+    * by table_name, replacing whatever `path` held. Serves read-only
+    * stores written once (the fixture demux store); chain ingest commits
+    * through [[IngestJob]] instead. */
+  def writeDemuxed(raw: DataFrame, defs: Seq[AbiSchema.TableDef], path: String): Unit =
     taggedKnown(raw, defs)
-      .write.mode(if (overwrite) "overwrite" else "append")
+      .write.mode("overwrite")
       .partitionBy("table_name")
       .parquet(path)
 

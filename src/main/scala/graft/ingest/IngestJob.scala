@@ -6,10 +6,11 @@ import graft.abi.AbiSchema
 import graft.sources.LogPlanning
 
 /** EP1 (eth-contract.py:77-146) as one Spark job: resume watermark over
-  * the demux store → adaptive range planning → partition-parallel log
-  * fetch → one-pass demux append. The reference's single-threaded
+  * the store's snapshot → adaptive range planning → partition-parallel
+  * log fetch → one-pass demux tag → one atomic commit to a
+  * [[ManifestStore]]. The reference's single-threaded
   * chunk-loop becomes: plan ranges once on the driver (density-adaptive,
-  * [[LogPlanning]]), fetch+decode-tag in parallel tasks, append
+  * [[LogPlanning]]), fetch+decode-tag in parallel tasks, commit
   * partitioned by table_name.
   *
   * Incremental semantics match the reference: resume from
@@ -19,28 +20,14 @@ import graft.sources.LogPlanning
   */
 object IngestJob {
 
-  /** Run one ingest pass; returns rows appended to the store. */
-  def run(spark: SparkSession, rpc: LogRpc, defs: Seq[AbiSchema.TableDef],
-          address: Option[Array[Byte]], storePath: String,
-          creationBlock: Long, chainHead: Long,
-          blocksStep: Long = 10000L, maxLogs: Long = 10000L): Long = {
-    val from = Writer.nextBlock(spark, Seq(storePath), creationBlock)
-    if (from > chainHead) return 0L
-    val raw = fetchRaw(spark, rpc, from, chainHead, address, blocksStep, maxLogs)
-    Demux.writeDemuxed(raw, defs, storePath)
-    // nothing tagged → the store may not exist yet; any other read
-    // failure after an append is real and must surface
-    try spark.read.parquet(storePath).filter(col("block_number") >= from).count()
-    catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-  }
-
-  /** The atomic form of [[run]]: the whole catch-up delta commits as one
-    * range overwrite of [resume, chainHead] in a [[ManifestStore]] — the
-    * reference's per-chunk transaction (classes.py:24-26) scaled up to
-    * one transaction per job run. Readers see the store before or after
-    * the catch-up, never mid-append; a crashed run leaves an unpublished
-    * commit directory (vacuumable) and the next run redoes the same range
-    * idempotently. Resume comes from the store's own snapshot watermark. */
+  /** Run one ingest pass; returns rows committed to the store. The whole
+    * catch-up delta commits as one range overwrite of [resume, chainHead]
+    * — the reference's per-chunk transaction (classes.py:24-26) scaled up
+    * to one transaction per job run. Readers see the store before or
+    * after the catch-up, never mid-append; a crashed run leaves an
+    * unpublished commit directory (vacuumable) and the next run redoes
+    * the same range idempotently. Resume comes from the store's own
+    * snapshot watermark. */
   def runAtomic(spark: SparkSession, rpc: LogRpc, defs: Seq[AbiSchema.TableDef],
                 address: Option[Array[Byte]], store: ManifestStore,
                 creationBlock: Long, chainHead: Long,
@@ -71,7 +58,7 @@ object IngestJob {
     store.readRange(spark, from, chainHead).map(_.count()).getOrElse(0L)
   }
 
-  /** Shared fetch pipeline: adaptive range planning on the driver, then
+  /** Fetch pipeline: adaptive range planning, then
     * partition-parallel `eth_getLogs` with the raw-log column order. */
   private def fetchRaw(spark: SparkSession, rpc: LogRpc, from: Long, to: Long,
                        address: Option[Array[Byte]], blocksStep: Long,

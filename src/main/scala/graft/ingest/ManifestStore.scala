@@ -1713,8 +1713,7 @@ final class ManifestStore(val root: String) extends Serializable {
       tombstones = _ => Nil, renames = _ => Nil)(_ => newFiles)
   }
 
-  /** Atomic overwrite-by-range (the manifest form of
-    * [[Writer.overwriteRange]], and the exactly-once commit for chain
+  /** Atomic overwrite-by-range (the exactly-once commit for chain
     * ingest): rows in [from, to] are replaced by `df` in one manifest
     * flip — readers see wholly-old or wholly-new, never the in-between.
     * Per-file stats prune the rewrite to the files the window actually

@@ -126,8 +126,8 @@ object MakerDw {
   def assetsPerTypeCatalog(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     MakerFixtures.ensureDemuxed(s)
-    graft.catalog.Warehouse.materialize(s, MakerFixtures.demuxStorePath,
-      MakerFixtures.fixtureDefs)
+    graft.catalog.Warehouse.materialize(s,
+      Demux.readTable(s, MakerFixtures.demuxStorePath, _), MakerFixtures.fixtureDefs)
     s.sql(assetsSqlText(t => s"makermcd.$t"))
   }
 
@@ -156,8 +156,8 @@ object MakerDw {
   def assetsPerTypeVerbatim(s: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(s)
     MakerFixtures.ensureDemuxed(s)
-    graft.catalog.Warehouse.materialize(s, MakerFixtures.demuxStorePath,
-      MakerFixtures.fixtureDefs)
+    graft.catalog.Warehouse.materialize(s,
+      Demux.readTable(s, MakerFixtures.demuxStorePath, _), MakerFixtures.fixtureDefs)
     val raw = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(referenceSqlPath)),
       java.nio.charset.StandardCharsets.UTF_8)

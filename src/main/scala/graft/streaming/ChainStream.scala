@@ -36,28 +36,13 @@ object ChainStream {
   def decodedTable(rawStream: DataFrame, d: AbiSchema.TableDef): DataFrame =
     Demux.table(rawStream, d)
 
-  /** Streaming ingest: demux-tag and append each micro-batch to the
-    * partitioned store — the streaming form of IngestJob's one-pass
-    * write, closing the loop chain → store while queries read the same
-    * layout. Checkpointed offsets make delivery at-least-once per
-    * block range; ranges are disjoint across batches (block offsets), so
-    * a replayed batch can only re-append its own range — dedup on
-    * (block_number, log_index) at read or an overwriteRange on recovery
-    * restores exactly-once. */
-  def ingestStream(raw: DataFrame, defs: Seq[AbiSchema.TableDef],
-                   storePath: String, checkpoint: String)
-  : org.apache.spark.sql.streaming.StreamingQuery =
-    raw.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Demux.writeDemuxed(batch, defs, storePath)
-      }
-      .start()
-
-  /** Exactly-once streaming ingest into a [[graft.ingest.ManifestStore]]:
-    * each micro-batch commits atomically as a RANGE OVERWRITE of its own
-    * block window — the streaming analogue of the reference's per-chunk
-    * transaction (eth-contract.py:85,145-146) composed with its
+  /** Streaming ingest: demux-tag each micro-batch and commit it to a
+    * [[graft.ingest.ManifestStore]] — the streaming form of IngestJob's
+    * one-pass write, closing the loop chain → store while queries read
+    * the same layout. Exactly-once: each micro-batch commits atomically
+    * as a RANGE OVERWRITE of its own block window — the streaming
+    * analogue of the reference's per-chunk transaction
+    * (eth-contract.py:85,145-146) composed with its
     * idempotent re-ingest (S15). Range dedup, not batch-id dedup, is the
     * idempotence mechanism: on restart Spark may re-deliver an
     * already-ingested block range under a NEW batch id (observed — the

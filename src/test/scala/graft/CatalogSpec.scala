@@ -54,11 +54,16 @@ class CatalogSpec extends AnyFunSuite {
 /** Schema-qualified warehouse tables (reference classes.py:56 schema
   * autocreate; README.md:73 CREATE DATABASE makermcd). */
 class WarehouseSpec extends org.scalatest.funsuite.AnyFunSuite {
+  /** Decoded tables of the fixture demux store. */
+  private def fixtureTables(spark: org.apache.spark.sql.SparkSession) =
+    graft.ingest.Demux.readTable(spark, graft.fixtures.MakerFixtures.demuxStorePath,
+      _: graft.abi.AbiSchema.TableDef)
+
   test("decoded tables resolve by qualified name through the session catalog") {
     val spark = TestSpark.spark
     graft.fixtures.MakerFixtures.ensureDemuxed(spark)
     graft.catalog.Warehouse.materialize(spark,
-      graft.fixtures.MakerFixtures.demuxStorePath,
+      fixtureTables(spark),
       graft.fixtures.MakerFixtures.fixtureDefs)
     assert(spark.catalog.databaseExists("makermcd"))
     // qualified resolution, decoded columns present
@@ -73,7 +78,7 @@ class WarehouseSpec extends org.scalatest.funsuite.AnyFunSuite {
       "SELECT COUNT(*) FROM makermcd.psm_evt_buygem").head().getLong(0) > 0)
     // idempotent: a second materialize keeps existing tables (no rewrite)
     graft.catalog.Warehouse.materialize(spark,
-      graft.fixtures.MakerFixtures.demuxStorePath,
+      fixtureTables(spark),
       graft.fixtures.MakerFixtures.fixtureDefs)
     assert(spark.table("makermcd.vat_call_frob").count() == direct.count())
   }
@@ -94,7 +99,8 @@ class WarehouseSpec extends org.scalatest.funsuite.AnyFunSuite {
     graft.ingest.Demux.writeDemuxed(
       graft.fixtures.MakerFixtures.rawLogs(spark), defs, root)
     try {
-      graft.catalog.Warehouse.materialize(spark, root, defs)
+      graft.catalog.Warehouse.materialize(spark,
+        graft.ingest.Demux.readTable(spark, root, _), defs)
       assert(spark.catalog.databaseExists("nsalpha"))
       assert(spark.catalog.databaseExists("nsbeta"))
       val a = spark.table("nsalpha.vat_call_frob").count()
@@ -127,7 +133,7 @@ class WarehouseSpec extends org.scalatest.funsuite.AnyFunSuite {
     // SQL-injection-shaped / invalid identifiers are rejected up front
     intercept[IllegalArgumentException] {
       graft.catalog.Warehouse.materialize(spark,
-        graft.fixtures.MakerFixtures.demuxStorePath, defs, db = "x; DROP TABLE y")
+        fixtureTables(spark), defs, db = "x; DROP TABLE y")
     }
     // a directory at the derived managed-table path that does NOT look
     // like a prior materialization is user data — refuse to delete it
@@ -144,7 +150,7 @@ class WarehouseSpec extends org.scalatest.funsuite.AnyFunSuite {
     try {
       val e0 = intercept[IllegalStateException] {
         graft.catalog.Warehouse.materialize(spark,
-          graft.fixtures.MakerFixtures.demuxStorePath, defs, db = "orphandb")
+          fixtureTables(spark), defs, db = "orphandb")
       }
       assert(e0.getMessage.contains("refusing to clear"))
       assert(fs.exists(new org.apache.hadoop.fs.Path(dir, ".backup/dump.csv")),
@@ -154,7 +160,7 @@ class WarehouseSpec extends org.scalatest.funsuite.AnyFunSuite {
       out.write("do not delete\n".getBytes("UTF-8")); out.close()
       val e = intercept[IllegalStateException] {
         graft.catalog.Warehouse.materialize(spark,
-          graft.fixtures.MakerFixtures.demuxStorePath, defs, db = "orphandb")
+          fixtureTables(spark), defs, db = "orphandb")
       }
       assert(e.getMessage.contains("refusing to clear"))
       assert(fs.exists(new org.apache.hadoop.fs.Path(dir, "precious.csv")),
@@ -182,7 +188,7 @@ class WarehouseSpec extends org.scalatest.funsuite.AnyFunSuite {
     out.write(Array[Byte](1, 2, 3)); out.close()
     try {
       graft.catalog.Warehouse.materialize(spark,
-        graft.fixtures.MakerFixtures.demuxStorePath, defs, db = "crashdb")
+        fixtureTables(spark), defs, db = "crashdb")
       assert(spark.sql(s"SELECT COUNT(*) FROM crashdb.${defs.head.table}")
         .head().getLong(0) > 0)
     } finally {

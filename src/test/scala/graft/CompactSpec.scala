@@ -3,41 +3,12 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.fixtures.MakerFixtures
-import graft.ingest.{Compact, Demux, ManifestStore}
+import graft.ingest.{Demux, ManifestStore}
 
-/** Small-file compaction of the demux store (layout-only rewrite). */
+/** The manifest-committed store: atomic commits, snapshot isolation and
+  * small-file compaction (layout-only rewrite). */
 class CompactSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-
-  test("compaction shrinks file counts without changing content or pruning") {
-    MakerFixtures.ensure(spark)
-    val store = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/store"
-    val raw = spark.read.parquet(MakerFixtures.rawLogsPath)
-    // simulate incremental appends → many small files per partition
-    (0 until 5).foreach { i =>
-      Demux.writeDemuxed(raw.filter(pmod(col("block_number"), lit(5)) === i),
-        MakerFixtures.fixtureDefs, store)
-    }
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val before = Compact.countDataFiles(fs, new org.apache.hadoop.fs.Path(store))
-    val checksumBefore = spark.read.parquet(store)
-      .agg(sum(xxhash64(col("transaction_hash"), col("block_number"),
-        col("log_index")).cast("decimal(38,0)")).as("h"), count(lit(1)).as("n")).head()
-
-    val after = Compact.run(spark, store)
-    assert(after < before, s"$after !< $before")
-    assert(after >= MakerFixtures.fixtureDefs.size) // ≥1 file per partition
-
-    val checksumAfter = spark.read.parquet(store)
-      .agg(sum(xxhash64(col("transaction_hash"), col("block_number"),
-        col("log_index")).cast("decimal(38,0)")).as("h"), count(lit(1)).as("n")).head()
-    assert(checksumBefore == checksumAfter)
-    // partition-pruned decode still works
-    val frob = Demux.readTable(spark, store,
-      MakerFixtures.tableDef("vat_call_frob"))
-    assert(frob.count() == 800)
-  }
 
   test("manifest store: append/overwriteRange/compact are atomic and snapshot-isolated") {
     import spark.implicits._
@@ -122,13 +93,16 @@ class CompactSpec extends AnyFunSuite {
     assert(stats.exists(e => e._1.contains("table_name=b") &&
       e._2.contains(500L) && e._3.contains(599L)))
     // re-deliver partition a's window: the old copy is replaced, b kept —
-    // with name-keyed stats file a would carry b's range and duplicate
+    // with name-keyed stats file a would carry b's range and duplicate.
+    // Re-ingesting a range adds 0 rows and leaves the resume watermark
+    assert(store.statsMax(spark).contains(599L))
     store.overwriteRange(spark,
       (0L until 100L).map(n => (n, "a")).toDF("block_number", "table_name"),
       0L, 99L, "block_number", Seq("table_name"))
     val snap = store.read(spark).get
     assert(snap.count() == 200)
     assert(snap.filter(col("block_number") <= 99).count() == 100)
+    assert(store.statsMax(spark).contains(599L))
   }
 
   test("manifest store: concurrent committers on separate instances lose no updates") {
@@ -446,15 +420,31 @@ class CompactSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_mstore_p").toString + "/store"
     val store = new ManifestStore(root)
     val raw = spark.read.parquet(MakerFixtures.rawLogsPath)
-    store.append(spark, Demux.taggedKnown(raw, MakerFixtures.fixtureDefs),
-      partitionCols = Seq("table_name"))
+    // incremental appends → many small files per partition
+    (0 until 5).foreach { i =>
+      store.append(spark, Demux.taggedKnown(
+        raw.filter(pmod(col("block_number"), lit(5)) === i), MakerFixtures.fixtureDefs),
+        partitionCols = Seq("table_name"))
+    }
     val snap = store.read(spark).get
     assert(snap.columns.contains("table_name")) // recovered from layout
     val frob = snap.filter(col("table_name") === "vat_call_frob")
     assert(frob.count() == 800)
+    def checksum() = store.read(spark).get
+      .agg(sum(xxhash64(col("transaction_hash"), col("block_number"),
+        col("log_index")).cast("decimal(38,0)")).as("h"), count(lit(1)).as("n")).head()
+    val checksumBefore = checksum()
+    val before = store.currentFiles(spark).size
     // compaction preserves the partition column and contents
     store.compact(spark, targetBytes = 1L << 30, partitionCols = Seq("table_name"))
+    val after = store.currentFiles(spark).size
+    assert(after < before, s"$after !< $before")
+    assert(after >= MakerFixtures.fixtureDefs.size) // ≥1 file per partition
+    assert(checksum() == checksumBefore)
     assert(store.read(spark).get.filter(col("table_name") === "vat_call_frob")
       .count() == 800)
+    // partition-pruned decode still works
+    assert(Demux.readTable(spark, store,
+      MakerFixtures.tableDef("vat_call_frob")).count() == 800)
   }
 }

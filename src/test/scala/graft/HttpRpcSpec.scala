@@ -202,16 +202,16 @@ class HttpRpcSpec extends AnyFunSuite {
       case (m, _) => Left((-32601L, s"method not found: $m"))
     }
     withRpcServer(handler) { url =>
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_http_ingest").toString + "/store"
+      val store = new graft.ingest.ManifestStore(java.nio.file.Files
+        .createTempDirectory("graft_http_ingest").toString + "/store")
       val defs = graft.fixtures.MakerFixtures.fixtureDefs
-      val n = graft.ingest.IngestJob.run(spark, new HttpLogRpc(url), defs,
+      val n = graft.ingest.IngestJob.runAtomic(spark, new HttpLogRpc(url), defs,
         None, store, 8928160L, 20000000L)
-      val expected = graft.ingest.Demux.tagged(
-        spark.read.parquet(graft.fixtures.MakerFixtures.rawLogsPath), defs)
-        .filter(org.apache.spark.sql.functions.col("table_name").isNotNull).count()
+      val expected = graft.ingest.Demux.taggedKnown(
+        spark.read.parquet(graft.fixtures.MakerFixtures.rawLogsPath), defs).count()
       assert(n == expected && n > 0,
-        s"HTTP ingest appended $n rows, replay expects $expected")
+        s"HTTP ingest committed $n rows, replay expects $expected")
+      assert(store.read(spark).get.count() == expected)
     }
   }
 

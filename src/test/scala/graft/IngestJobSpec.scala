@@ -5,45 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.fixtures.MakerFixtures
 import graft.ingest.{Demux, IngestJob, LogSource}
 
-/** EP1 end-to-end: resume → adaptive plan → parallel fetch → demux append. */
+/** EP1 end-to-end: resume → adaptive plan → parallel fetch → atomic demux commit. */
 class IngestJobSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-
-  test("incremental ingest: catch-up, idempotent re-run, resume") {
-    MakerFixtures.ensure(spark)
-    val rpc = LogSource.replayFromParquet(spark, MakerFixtures.rawLogsPath)
-    val store = java.nio.file.Files.createTempDirectory("graft_ingest").toString + "/store"
-    val defs = MakerFixtures.fixtureDefs
-    val corpus = spark.read.parquet(MakerFixtures.rawLogsPath)
-    val creation = 8928160L
-    val head1 = 10500000L
-
-    // pass 1: ingest up to head1
-    val n1 = IngestJob.run(spark, rpc, defs, None, store, creation, head1)
-    val taggedUpToHead1 = Demux.tagged(
-      corpus.filter(col("block_number") <= head1), defs)
-      .filter(col("table_name").isNotNull).count()
-    assert(n1 == taggedUpToHead1 && n1 > 0)
-
-    // pass 2 at the same head: no-op
-    val n2 = IngestJob.run(spark, rpc, defs, None, store, creation, head1)
-    assert(n2 == 0L)
-    assert(spark.read.parquet(store).count() == n1)
-
-    // pass 3: chain advanced → only the delta is appended
-    val headMax = 20000000L
-    val n3 = IngestJob.run(spark, rpc, defs, None, store, creation, headMax)
-    val taggedAll = Demux.tagged(corpus, defs)
-      .filter(col("table_name").isNotNull).count()
-    assert(n1 + n3 == taggedAll)
-
-    // per-table reads from the ingested store match direct decode
-    val viaStore = Demux.readTable(spark, store,
-      MakerFixtures.tableDef("vat_call_frob")).count()
-    val direct = Demux.table(corpus,
-      MakerFixtures.tableDef("vat_call_frob")).count()
-    assert(viaStore == direct && direct > 0)
-  }
 
   test("atomic ingest: catch-up, idempotent re-run, resume (manifest commits)") {
     MakerFixtures.ensure(spark)
@@ -51,10 +15,16 @@ class IngestJobSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_aingest").toString + "/store"
     val store = new graft.ingest.ManifestStore(root)
     val defs = MakerFixtures.fixtureDefs
+    // the creation block cuts into the corpus: logs below it must never
+    // be fetched, so an empty store provably starts AT creationBlock
+    val creation = 9000000L
     val corpus = spark.read.parquet(MakerFixtures.rawLogsPath)
-    val creation = 8928160L
+      .filter(col("block_number") >= creation)
+    assert(Demux.taggedKnown(spark.read.parquet(MakerFixtures.rawLogsPath)
+      .filter(col("block_number") < creation), defs).count() > 0)
     val head1 = 10500000L
 
+    assert(store.read(spark).isEmpty && store.statsMax(spark).isEmpty)
     val n1 = IngestJob.runAtomic(spark, rpc, defs, None, store, creation, head1)
     val expected1 = Demux.taggedKnown(
       corpus.filter(col("block_number") <= head1), defs).count()
@@ -64,8 +34,13 @@ class IngestJobSpec extends AnyFunSuite {
     assert(IngestJob.runAtomic(spark, rpc, defs, None, store, creation, head1) == 0L)
     assert(store.read(spark).get.count() == n1)
 
-    // chain advance → delta only; total equals the full tagged corpus
+    // after a commit the watermark is the stored max (over every table),
+    // and a chain advance lands exactly the rows past it
+    val watermark = store.read(spark).get.agg(max("block_number")).head().getLong(0)
+    assert(store.statsMax(spark).contains(watermark))
     val n3 = IngestJob.runAtomic(spark, rpc, defs, None, store, creation, 20000000L)
+    assert(n3 == Demux.taggedKnown(
+      corpus.filter(col("block_number") > watermark), defs).count())
     val taggedAll = Demux.taggedKnown(corpus, defs).count()
     assert(n1 + n3 == taggedAll)
     assert(store.read(spark).get.count() == taggedAll)

@@ -11,7 +11,8 @@ class MainSpec extends AnyFunSuite {
     MakerFixtures.ensure(spark)
     val store = java.nio.file.Files.createTempDirectory("graft_cli").toString + "/store"
     Main.main(Array("ingest", "makermcd.vat", "/root/reference", store))
-    val written = spark.read.parquet(store)
+    val ms = new graft.ingest.ManifestStore(store)
+    val written = ms.read(spark).get
     // the fixture corpus carries 800 frob + 150 grab + 400 fold vat
     // calls; tags are SCHEMA-QUALIFIED since r15 (the conf-tree
     // namespace is part of the table identity)
@@ -20,6 +21,26 @@ class MainSpec extends AnyFunSuite {
     assert(counts("makermcd.vat_call_frob") == 800)
     assert(counts("makermcd.vat_call_grab") == 150)
     assert(counts("makermcd.vat_call_fold") == 400)
+
+    // same head again: the snapshot watermark says nothing is new — no
+    // rows land, no version is published, the row count stands
+    val rows = written.count()
+    val version = ms.currentVersion(spark)
+    val again = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(again)) {
+      Main.main(Array("ingest", "makermcd.vat", "/root/reference", store))
+    }
+    assert(again.toString.contains("ingested 0 rows"), again.toString)
+    assert(ms.currentVersion(spark) == version)
+    assert(ms.read(spark).get.count() == rows)
+
+    // the warehouse decodes the ingest store into the defs' own
+    // `makermcd` namespace
+    Main.main(Array("warehouse", store, "makermcd", "makermcd.vat"))
+    def n(t: String) = spark.sql(s"SELECT COUNT(*) FROM makermcd.$t").head().getLong(0)
+    assert(n("vat_call_frob") == 800)
+    assert(n("vat_call_grab") == 150)
+    assert(n("vat_call_fold") == 400)
   }
 
   test("blocks writes the requested range") {
@@ -32,9 +53,20 @@ class MainSpec extends AnyFunSuite {
     MakerFixtures.ensure(spark)
     val store = java.nio.file.Files.createTempDirectory("graft_cli").toString + "/store"
     Main.main(Array("ingest", "makermcd.vat", "/root/reference", store))
-    val before = spark.read.parquet(store).count()
+    val ms = new graft.ingest.ManifestStore(store)
+    val before = ms.read(spark).get.count()
+    val filesBefore = ms.currentFiles(spark).size
     Main.main(Array("compact", store))
-    assert(spark.read.parquet(store).count() == before)
+    assert(ms.read(spark).get.count() == before)
+    val files = ms.currentFiles(spark)
+    assert(files.size < filesBefore, s"${files.size} !< $filesBefore")
+    // the table_name layout survives compaction, so a per-table read
+    // still prunes to its own directory
+    assert(files.forall(_.contains("/table_name=")), files.mkString("\n"))
+    val frob = graft.ingest.Demux.readTable(spark, ms,
+      MakerFixtures.tableDef("vat_call_frob").copy(schemaName = "makermcd"))
+    assert(frob.count() == 800)
+    assert(Plans.filesRead(frob) < files.size.toLong)
   }
 
   test("warehouse CLI materializes qualified tables") {
@@ -77,11 +109,15 @@ class MainSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_cli").toString + "/mstore"
     val store = new graft.ingest.ManifestStore(root)
     (0 until 3).foreach { i =>
-      store.append(spark, Seq((i.toLong, s"r$i")).toDF("block_number", "v"),
-        rangeCol = Some("block_number"))
+      store.append(spark, Seq((i.toLong, s"t${i % 2}")).toDF("block_number", "table_name"),
+        partitionCols = Seq("table_name"), rangeCol = Some("block_number"))
     }
-    Main.main(Array("mstore-compact", root))
+    Main.main(Array("compact", root))
     assert(store.read(spark).get.count() == 3)
+    // one file per table_name directory after compaction
+    val files = store.currentFiles(spark)
+    assert(files.size == 2 && files.exists(_.contains("/table_name=t0/")) &&
+      files.exists(_.contains("/table_name=t1/")), files.mkString("\n"))
     Main.main(Array("mstore-vacuum", root, "1", "0"))
     assert(store.read(spark).get.count() == 3)
     // below the retained window the manifests are gone

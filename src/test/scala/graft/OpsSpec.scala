@@ -492,17 +492,6 @@ class OpsSpec extends AnyFunSuite {
     assert(lateral.toSeq == Seq((2L, 2L), (2L, 4L), (2L, 6L)))
   }
 
-  test("resume watermark: max(block_number)+1 across tables, else creationBlock") {
-    import graft.ingest.Writer
-    val none = Writer.nextBlock(spark, Seq("/nonexistent/a", "/nonexistent/b"), 123L)
-    assert(none == 123L)
-    graft.fixtures.MakerFixtures.ensure(spark)
-    val p = graft.fixtures.MakerFixtures.truthPath("vat_call_frob")
-    val next = Writer.nextBlock(spark, Seq(p), 0L)
-    val mx = spark.read.parquet(p).agg(max("block_number")).collect()(0).getLong(0)
-    assert(next == mx + 1)
-  }
-
   test("gopher rules: each document-shape rule fires on its constructed doc") {
     import graft.ops.TextAnalysis
     import spark.implicits._

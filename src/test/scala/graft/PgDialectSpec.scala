@@ -317,7 +317,7 @@ class PgDialectSpec extends AnyFunSuite {
     graft.codec.GraftFunctions.register(spark)
     graft.fixtures.MakerFixtures.ensureDemuxed(spark)
     graft.catalog.Warehouse.materialize(spark,
-      graft.fixtures.MakerFixtures.demuxStorePath,
+      graft.ingest.Demux.readTable(spark, graft.fixtures.MakerFixtures.demuxStorePath, _),
       graft.fixtures.MakerFixtures.fixtureDefs)
     val raw = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(MakerDw.referenceSqlPath)), "UTF-8")

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.ops.Skew
-import graft.ingest.Writer
 
 class ScaleSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -35,22 +34,6 @@ class ScaleSpec extends AnyFunSuite {
     val two = Skew.twoPhaseCount(df, "k", col("id"), 8).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(plain == two)
-  }
-
-  test("overwriteRange is idempotent (re-ingesting a range adds 0 rows)") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_writer").toString + "/t"
-    val batch1 = (1L to 100L).map(n => (n, s"v$n")).toDF("block_number", "v")
-    Writer.append(batch1, dir)
-    assert(spark.read.parquet(dir).count() == 100)
-    // re-ingest blocks 40..60 (simulating a re-run over an ingested range)
-    val again = (40L to 60L).map(n => (n, s"v$n")).toDF("block_number", "v")
-    Writer.overwriteRange(spark, again, dir, 40, 60)
-    val after = spark.read.parquet(dir)
-    assert(after.count() == 100)
-    assert(after.filter(col("block_number").between(40, 60)).count() == 21)
-    // and the resume watermark is unchanged
-    assert(Writer.nextBlock(spark, Seq(dir), 0) == 101)
   }
 
   test("bucketed co-located join plans without a shuffle") {
