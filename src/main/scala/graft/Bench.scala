@@ -211,8 +211,10 @@ object Bench {
     * first; a divergence is the silent-wrong-answer-under-concurrency
     * bug class and fails the bench loudly. */
   private[graft] def concurrentPass(spark: SparkSession, sfDir: String,
-      threads: Int): ConcurrentStats = {
-    val qs = SparkEntry.queries.toSeq.sortBy(_._1)
+      threads: Int,
+      queries: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
+  : ConcurrentStats = {
+    val qs = queries.toSeq.sortBy(_._1)
     // reference failures are CRASHES, not divergences — record and keep
     // going, so one flaky query cannot discard the completed timed passes
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -721,7 +723,7 @@ object Bench {
       .filter(_ => budgetFits("concurrent", 1.8 * warmPassEst + 60))
       .map { n =>
         val loadPre = loadAvg()
-        val cs = concurrentPass(spark, sfDir, n)
+        val cs = concurrentPass(spark, sfDir, n, SparkEntry.queries)
         if (cs.mismatches.nonEmpty)
           System.err.println(s"[bench] CONCURRENT HASH MISMATCH: ${
             cs.mismatches.mkString(",")}")
@@ -1273,19 +1275,9 @@ object Bench {
       matviewJson + pointProbeJson + budgetJson +
       s""""plans_ok":$plansOk,""" +
       s"""$env,"metric":"total","value":${f3(total)},"unit":"sec"}"""
-    val sfShort = new java.io.File(sfDir).getName
-    val failedShown = failed.take(12)
-    val failedSummary = (failedShown.map("\"" + _ + "\"") ++
-      (if (failed.size > failedShown.size)
-        Seq("\"+" + (failed.size - failedShown.size) + " more\"") else Nil))
-      .mkString("[", ",", "]")
-    // the DRIVER-CONTRACT stdout line: one JSON object, inline
-    // "queries" record map, headline metric/value/unit LAST
-    val json = s"""{"sf":"$sfShort","n_ok":${results.size},""" +
-      s""""n_failed":${failed.size},"failed":$failedSummary,""" +
-      s""""plans_ok":$plansOk,$budgetJson$env,""" +
-      s""""queries":${qs(f3)},""" +
-      s""""metric":"total","value":${f3(total)},"unit":"sec"}"""
+    val nMismatch = concurrentJson.map(_._2.size).getOrElse(0)
+    val json = contractLine(new java.io.File(sfDir).getName, results.size,
+      failed, nMismatch, plansOk, budgetJson + env, qs(f3), f3(total))
     // persist the full diagnostic record; print the contract line as
     // the very LAST stdout line (after Spark shutdown noise) so a
     // parse of the tail finds bare JSON
@@ -1306,27 +1298,51 @@ object Bench {
     System.out.flush()
     println(json)
     System.out.flush()
-    // rc policy (r16): a FAILED query — one with no wall time at all —
-    // is the only nonzero exit. Every other tripwire (cold ceiling,
-    // concurrent hash mismatch/crash, plan-shape regression) reports
-    // loudly on stderr AND in both JSON copies but exits 0: the r15
-    // driver run proved that exiting nonzero after printing a full
-    // record voids the record itself (the harness treats rc != 0 as
-    // "bench failed" and discards everything), which turns diagnostic
-    // evidence into data loss. Hash mismatches remain impossible to
-    // miss — CAPS stderr, "mismatches" in the concurrent JSON, and the
-    // oracle run checks every query's answer independently.
-    if (failed.nonEmpty) {
+    // rc policy: a wrong or missing answer is the only nonzero exit — a
+    // FAILED query (no wall time at all) or a CONCURRENT HASH MISMATCH
+    // (an answer under concurrency that differs from its sequential
+    // reference; counted as "n_mismatch" on the contract line). Every
+    // other tripwire (cold ceiling, concurrent-pass crash, plan-shape
+    // regression) reports loudly on stderr AND in both JSON copies but
+    // exits 0: a nonzero exit marks the whole run failed and voids the
+    // record it printed, a loss worth taking only for a wrong answer.
+    if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} quer${
         if (failed.size == 1) "y" else "ies"} FAILED: ${failed.mkString(", ")}")
-      sys.exit(1)
-    }
-    if (concurrentJson.exists(_._2.nonEmpty))
+    if (nMismatch > 0)
       System.err.println("[bench] CONCURRENT HASH MISMATCH (wrong answer " +
-        "under concurrency — investigate before shipping): " +
-        concurrentJson.map(_._2.mkString(",")).getOrElse(""))
+        "under concurrency): " + concurrentJson.map(_._2.mkString(",")).getOrElse(""))
     if (concurrentJson.exists(_._3.nonEmpty))
       System.err.println("[bench] concurrent-pass crashes (loud, rc stays " +
         "0): " + concurrentJson.map(_._3.mkString(",")).getOrElse(""))
+    val rc = exitCode(failed, nMismatch)
+    if (rc != 0) sys.exit(rc)
   }
+
+  /** The contract stdout line: one JSON object, inline "queries"
+    * record map, headline metric/value/unit LAST. `nMismatch` counts the
+    * concurrent pass's wrong answers (0 when the pass did not run — its
+    * absence shows as a missing "concurrent" block in bench_out.json);
+    * `envJson` is the budget and env fields, each ending in its own
+    * separator except the last. */
+  private[graft] def contractLine(sfShort: String, nOk: Int,
+      failed: Seq[String], nMismatch: Int, plansOk: String, envJson: String,
+      queriesJson: String, total: String): String = {
+    val failedShown = failed.take(12)
+    val failedSummary = (failedShown.map("\"" + _ + "\"") ++
+      (if (failed.size > failedShown.size)
+        Seq("\"+" + (failed.size - failedShown.size) + " more\"") else Nil))
+      .mkString("[", ",", "]")
+    s"""{"sf":"$sfShort","n_ok":$nOk,""" +
+      s""""n_failed":${failed.size},"failed":$failedSummary,""" +
+      s""""n_mismatch":$nMismatch,""" +
+      s""""plans_ok":$plansOk,$envJson,""" +
+      s""""queries":$queriesJson,""" +
+      s""""metric":"total","value":$total,"unit":"sec"}"""
+  }
+
+  /** Exit code of a bench run: 1 on any failed query or concurrent
+    * hash mismatch, else 0. */
+  private[graft] def exitCode(failed: Seq[String], nMismatch: Int): Int =
+    if (failed.nonEmpty || nMismatch > 0) 1 else 0
 }

@@ -282,9 +282,10 @@ object Plans {
       }
     }
 
-    // 10. manifest-store reads keep partition pruning: the per-commit
-    //     union reads each commit dir with its own basePath, so a
-    //     table_name filter still prunes at the file-partition level
+    // 10. manifest-store reads keep partition pruning: every snapshot
+    //     file carries its partition values into the manifest file
+    //     index, so a table_name filter still prunes at the
+    //     file-partition level
     val mroot = Files.createTempDirectory("graft_plan_mstore").toString + "/store"
     val mstore = new ingest.ManifestStore(mroot)
     mstore.append(spark,

@@ -27,12 +27,16 @@ import org.json4s.jackson.JsonMethods
 final class JsonRpcError(val code: Long, message: String)
   extends RuntimeException(s"JSON-RPC error $code: $message")
 
-/** Minimal JSON-RPC 2.0 client over the JDK HTTP client. */
+/** Minimal JSON-RPC 2.0 client over the JDK HTTP client. Every call is
+  * bounded: a provider that stalls on connect or never answers makes
+  * [[call]] throw `java.net.http.HttpTimeoutException` instead of holding
+  * a fetch task forever. */
 final class JsonRpcClient(endpoint: String) extends Serializable {
 
   // both lazy: rebuilt after task-side deserialization (a plain
   // @transient val would deserialize to null)
-  @transient private lazy val http = java.net.http.HttpClient.newHttpClient()
+  @transient private lazy val http = java.net.http.HttpClient.newBuilder()
+    .connectTimeout(JsonRpcClient.ConnectTimeout).build()
   @transient private lazy val nextId = new java.util.concurrent.atomic.AtomicLong(1)
 
   def call(method: String, params: JValue): JValue = {
@@ -41,6 +45,7 @@ final class JsonRpcClient(endpoint: String) extends Serializable {
         "method" -> JString(method), "params" -> params)))
     val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(endpoint))
       .header("Content-Type", "application/json")
+      .timeout(JsonRpcClient.RequestTimeout)
       .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body,
         StandardCharsets.UTF_8))
       .build()
@@ -65,6 +70,16 @@ final class JsonRpcClient(endpoint: String) extends Serializable {
       case _ => parsed \ "result"
     }
   }
+}
+
+object JsonRpcClient {
+  /** TCP connect bound per call. */
+  val ConnectTimeout: java.time.Duration = java.time.Duration.ofSeconds(10)
+
+  /** Bound on one call until the response headers arrive: well above a
+    * healthy provider's answer to a full 10,000-log `eth_getLogs`
+    * window. */
+  val RequestTimeout: java.time.Duration = java.time.Duration.ofSeconds(30)
 }
 
 private[ingest] object EthJson {

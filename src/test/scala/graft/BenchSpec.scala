@@ -204,4 +204,27 @@ class BenchSpec extends AnyFunSuite {
     assert(drained.head._1 == "idx_a", "must sort cost-descending")
     assert(BuildLog.drain().isEmpty, "drain must empty the registry")
   }
+
+  test("a concurrent wrong answer reaches the contract line and exits 1") {
+    // a query whose answer changes after its sequential reference: every
+    // concurrent run diverges, as a wrong answer under concurrency would
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val qs: Map[String, (SparkSession, String) => DataFrame] = Map(
+      "drifting" -> ((s, _) => s.range(1 + calls.getAndIncrement()).toDF("x")),
+      "stable" -> ((s, _) => s.range(3).toDF("x")))
+    val cs = Bench.concurrentPass(spark, "", 2, qs)
+    assert(cs.mismatches == Seq("drifting") && cs.errors.isEmpty,
+      s"mismatches ${cs.mismatches}, errors ${cs.errors}")
+    val line = Bench.contractLine("sf0.001", 2, Nil, cs.mismatches.size,
+      "true", "\"env\":{}", """{"stable":0.100}""", "0.100")
+    val parsed = org.json4s.jackson.JsonMethods.parse(line)
+    import org.json4s._
+    assert((parsed \ "n_mismatch") == JInt(1), line)
+    assert((parsed \ "queries" \ "stable") != JNothing, line)
+    assert(line.endsWith(""""metric":"total","value":0.100,"unit":"sec"}"""),
+      s"value must stay last: $line")
+    assert(Bench.exitCode(Nil, cs.mismatches.size) == 1)
+    assert(Bench.exitCode(Nil, 0) == 0)
+    assert(Bench.exitCode(Seq("broken"), 0) == 1)
+  }
 }

@@ -7,7 +7,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ingest.{HttpBlockRpc, HttpLogRpc, HttpReceiptRpc, JsonRpcError}
+import graft.ingest.{HttpBlockRpc, HttpLogRpc, HttpReceiptRpc, JsonRpcClient,
+  JsonRpcError}
 
 /** HTTP transports against a local stub JSON-RPC/Etherscan server: the
   * over-limit halving policy, field decoding, executor-side use, and the
@@ -129,6 +130,35 @@ class HttpRpcSpec extends AnyFunSuite {
         new HttpLogRpc(url).getLogs(50, 50, None).toVector
       }
       assert(ex.getMessage.contains("more than 25"))
+    }
+  }
+
+  test("a provider that accepts and never answers times the call out") {
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      ex.getRequestBody.readAllBytes()
+      release.await() // hold the exchange open without a response
+      ex.close()
+    })
+    server.setExecutor(pool)
+    server.start()
+    try {
+      val client = new JsonRpcClient(
+        s"http://127.0.0.1:${server.getAddress.getPort}/")
+      val t0 = System.nanoTime()
+      intercept[java.net.http.HttpTimeoutException] {
+        client.call("eth_blockNumber", JArray(Nil))
+      }
+      val waited = (System.nanoTime() - t0) / 1e9
+      val bound = JsonRpcClient.RequestTimeout.toMillis / 1e3
+      assert(waited >= bound - 1 && waited < bound + 10,
+        s"timed out after $waited s, bound $bound s")
+    } finally {
+      release.countDown()
+      server.stop(0)
+      pool.shutdownNow()
     }
   }
 
